@@ -1,0 +1,1 @@
+"""CDC benchmark: see README.md in this directory."""
